@@ -113,6 +113,24 @@ def _await_idle_box(max_load: float, max_wait_s: int = 120) -> float | None:
     return load
 
 
+def cold_calibration(p: dict, fname: str) -> float | None:
+    """A recorded payload's COLD calibration anchor, or ``None``.
+
+    The calibration floor must be a cold-anchor minimum: r01-r14
+    recorded ``calibration_sec`` before any warm-up existed (cold); r15
+    recorded it AFTER the codegen warm-up loop (warm — skipped, it would
+    poison the cold drift ratio); r16+ record the pre-warm-up anchor
+    explicitly as ``calibration_cold_sec``. The round comes from the
+    ``r<N>`` in the file name; without one, only the explicit cold
+    anchor counts.
+    """
+    c = p.get("calibration_cold_sec")
+    m = re.search(r"r(\d+)", os.path.basename(fname))
+    if c is None and m and int(m.group(1)) <= 14:
+        c = p.get("calibration_sec")
+    return c
+
+
 def recorded_floor(here: str, max_load: float) -> dict:
     """Scan recorded BENCH_r*.json files for the per-query minimum floor.
 
@@ -148,16 +166,7 @@ def recorded_floor(here: str, max_load: float) -> dict:
             for name, t in (p.get("queries") or {}).items():
                 if t and (name not in fq or t < fq[name]):
                     fq[name] = t
-            # The calibration floor must be a COLD-anchor minimum
-            # (r15 judge finding #3): r01-r14 recorded calibration_sec
-            # before any warm-up existed (cold); r15 recorded it AFTER
-            # the codegen warm-up loop (warm — skipped here, it would
-            # poison the cold floor); r16+ record the pre-warm-up
-            # anchor explicitly as calibration_cold_sec.
-            rnd = int(re.search(r"\d+", f).group())
-            c = p.get("calibration_cold_sec")
-            if c is None and rnd <= 14:
-                c = p.get("calibration_sec")
+            c = cold_calibration(p, f)
             if c and (calib_floor is None or c < calib_floor):
                 calib_floor = c
             used.append(f)
@@ -353,7 +362,7 @@ def main() -> None:
             # `get("parsed", floor)` is not enough: use `or floor`.
             p = floor.get("parsed") or floor
             fq = p.get("queries", {})
-            calib_floor = p.get("calibration_cold_sec") or p.get("calibration_sec")
+            calib_floor = cold_calibration(p, floor_path)
             payload["floor"] = os.path.basename(floor_path)
         except (OSError, ValueError, KeyError, AttributeError, TypeError):
             fq = {}

@@ -157,9 +157,9 @@ def replicate_changes(
     range expired under vacuum — resync pinned to the stamped
     version).
 
-    ``strategy="mor"`` applies the net effect through
-    ``delete_keys_mor`` + ``merge_mor`` (deletion vectors + append,
-    one JSON commit each) instead of copy-on-write — the right default
+    ``strategy="mor"`` applies the net effect through the merge-on-read
+    ``delete_keys`` + ``merge`` (deletion vectors + append, one JSON
+    commit each) instead of copy-on-write — the right default
     once the replica is large relative to each sync's change set.
 
     ``route_inserts`` (default on) — keys with no retraction event in
@@ -256,21 +256,19 @@ def _apply_netted(
     have_ups = bool(upserts.limit(1).count())
     have_fresh = bool(fresh.limit(1).count())
     if have_dels:
-        apply_delete = (
-            dst.delete_keys_mor if strategy == "mor" else dst.delete_keys
-        )
-        apply_delete(
+        dst.delete_keys(
             deleted_keys,
             key_cols,
             txn=None if (have_ups or have_fresh) else txn,
+            strategy=strategy,
         )
     if have_ups:
-        apply_merge = dst.merge_mor if strategy == "mor" else dst.merge
-        apply_merge(
+        dst.merge(
             upserts,
             key_cols,
             txn=None if have_fresh else txn,
             schema_evolution=True,
+            strategy=strategy,
         )
     if have_fresh:
         dst.append(fresh, txn=txn, schema_evolution=True)

@@ -2227,7 +2227,7 @@ def lakehouse_cdc_replication_audit(
 
 def _dv_audit_oracle() -> str:
     """Table state per version around merge-on-read deletes: v1 all
-    events, v2 after delete_mor(%5==0), v3 after delete_mor(%7==0)
+    events, v2 after MoR delete(%5==0), v3 after MoR delete(%7==0)
     accumulates, v4 after compact (same rows, vectors purged). n_meta
     mirrors n_rows at every version (metadata counts subtract DV runs
     exactly). dv_feed restates the v2 change feed (the DV'd rows as
@@ -2261,15 +2261,15 @@ def _dv_audit_oracle() -> str:
 def lakehouse_dv_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE-ON-READ deletes via DELETION VECTORS under the driver
     gate (r10 — Delta DVs / Iceberg v2 position deletes):
-    ``delete_mor`` records the matched rows' row-index runs in the
+    ``delete(strategy="mor")`` records the matched rows' row-index runs in the
     manifest instead of rewriting files, so a GDPR-style delete
     scattered across a 100 TB table costs one JSON write; readers
     subtract the vectors through a codegen ``_metadata`` predicate
     (no join — the scan stays whole-stage fused).
 
-    Lifecycle: CREATE events -> delete_mor(%5==0) — the
+    Lifecycle: CREATE events -> MoR delete(%5==0) — the
     ``metadata_only`` flag pins that NO parquet file was written or
-    dropped by the commit -> delete_mor(%7==0) — vectors accumulate
+    dropped by the commit -> MoR delete(%7==0) — vectors accumulate
     (union of runs; already-dead rows cannot re-match because the
     matching scan is itself DV-filtered) -> COMPACT — same rows, new
     files, the ``dv_purged`` flag pins that rewritten files carry no
@@ -2295,12 +2295,12 @@ def lakehouse_dv_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             return n
 
         files_before = live_parquet()
-        t.delete_mor(F.col("event_id") % 5 == 0)
+        t.delete(F.col("event_id") % 5 == 0, strategy="mor")
         metadata_only = int(
             live_parquet() == files_before
             and set(t.snapshot().files) == set(t.snapshot(version=1).files)
         )
-        t.delete_mor(F.col("event_id") % 7 == 0)
+        t.delete(F.col("event_id") % 7 == 0, strategy="mor")
         t.compact(target_files=4)
         dv_purged = int(not t.snapshot().dvs)
 
@@ -2608,9 +2608,9 @@ def lakehouse_rename_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dv_merge_audit_oracle() -> str:
     """Table state per version around a MERGE-ON-READ upsert: v1 =
-    events with event_id%3<2; v2 after merge_mor(source = %5==0 with
+    events with event_id%3<2; v2 after MoR merge(source = %5==0 with
     value+1000, key event_id) — matched old images DV'd, every source
-    row appended; v3 after delete_mor(%7==0) accumulating on top; v4
+    row appended; v3 after MoR delete(%7==0) accumulating on top; v4
     after compact (same rows, vectors purged). feed_* restates v2's
     change feed: deletes = the matched keys' OLD images, inserts =
     every source row (NEW images). n_meta mirrors n at every version
@@ -2660,7 +2660,7 @@ def _dv_merge_audit_oracle() -> str:
 def lakehouse_dv_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE-ON-READ upserts via DELETION VECTORS under the driver
     gate (r11 — Delta's DV-backed MERGE, the upsert twin of
-    ``lakehouse_dv_audit``'s deletes): ``merge_mor`` soft-deletes the
+    ``lakehouse_dv_audit``'s deletes): ``merge(strategy="mor")`` soft-deletes the
     matched target rows' positions and appends the source as new files
     in ONE commit, instead of COW-rewriting every file that holds a
     matched key. The 100 TB fit is the reference's continuously-
@@ -2668,9 +2668,9 @@ def lakehouse_dv_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch updating 10^4 keys scattered across 10^4 files costs one
     source-sized write plus one JSON commit, not a ~1 TB rewrite.
 
-    Lifecycle: CREATE (event_id%3<2) -> merge_mor(%5==0, value+1000)
+    Lifecycle: CREATE (event_id%3<2) -> MoR merge(%5==0, value+1000)
     — the ``mor_no_rewrite`` flag pins that every pre-existing file
-    SURVIVED the commit (vectors, not rewrites) -> delete_mor(%7==0)
+    SURVIVED the commit (vectors, not rewrites) -> MoR delete(%7==0)
     — delete vectors accumulate over merge vectors -> COMPACT — the
     ``dv_purged`` flag pins re-materialization. Probes per version:
     scan aggregates and metadata-only ``row_count`` (``n_meta``);
@@ -2686,17 +2686,18 @@ def lakehouse_dv_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = SnapshotTable(spark, os.path.join(tmp, "fact"))
         t.create(ev.filter(F.col("event_id") % 3 < 2))
         files_v1 = set(t.snapshot().files)
-        t.merge_mor(
+        t.merge(
             ev.filter(F.col("event_id") % 5 == 0).withColumn(
                 "value", F.col("value") + F.lit(1000.0)
             ),
             ["event_id"],
+            strategy="mor",
         )
         snap2 = t.snapshot()
         mor_no_rewrite = int(
             files_v1 <= set(snap2.files) and bool(snap2.dvs)
         )
-        t.delete_mor(F.col("event_id") % 7 == 0)
+        t.delete(F.col("event_id") % 7 == 0, strategy="mor")
         t.compact(target_files=4)
         dv_purged = int(not t.snapshot().dvs)
 
@@ -2821,11 +2822,12 @@ def lakehouse_cdf_persisted_audit(
         t.create(ev.filter(F.col("event_id") % 2 == 0))
         t.delete(F.col("event_id") % 6 == 0)
         t.append(ev.filter(F.col("event_id") % 2 == 1))
-        t.merge_mor(
+        t.merge(
             ev.filter(F.col("event_id") % 9 == 0).withColumn(
                 "value", F.col("value") + F.lit(500.0)
             ),
             ["event_id"],
+            strategy="mor",
         )
         swept = t.vacuum(retain_last=3, orphan_grace_ms=0)
         preimages_swept = int(bool(swept))
@@ -3140,7 +3142,7 @@ def streaming_cdc_replica_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     version.
 
     Lifecycle: source CREATE (event_id%3<2) -> drain 1 (bootstrap) ->
-    COW DELETE (%7==0) + merge_mor upsert (%5==0, value+1000 — the
+    COW DELETE (%7==0) + MoR merge upsert (%5==0, value+1000 — the
     DV-backed MERGE flowing through the stream) -> drain 2 as TWO
     per-commit micro-batches (count pinned). The stream checkpoint is
     then DELETED and re-drained: the replica's version must not move
@@ -3182,11 +3184,12 @@ def streaming_cdc_replica_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out = state(1)
         src.delete(F.col("event_id") % 7 == 0)
-        src.merge_mor(
+        src.merge(
             ev.filter(F.col("event_id") % 5 == 0).withColumn(
                 "value", F.col("value") + F.lit(1000.0)
             ),
             ["event_id"],
+            strategy="mor",
         )
         ranges = maintain_replica_stream(src, dst, ["event_id"], ckpt)
         out = out.unionByName(state(2))
@@ -3243,7 +3246,7 @@ def lakehouse_dedup_retention_audit(
     — the composition that makes the LLM-pipeline dedup tier
     OPERATIONAL at 100 TB): exact near-copies are found with the same
     hash-group discipline as the batch dedup operators, retracted from
-    the corpus table via ``delete_keys_mor`` (the loser keys arrive as
+    the corpus table via ``delete_keys(strategy="mor")`` (the loser keys arrive as
     a DataFrame; matched positions become deletion vectors — ONE JSON
     commit for losers scattered across the whole corpus, never a
     rewrite), and the downstream per-language rollup refreshes from
@@ -3254,7 +3257,7 @@ def lakehouse_dedup_retention_audit(
     doc_id%4==0 (content hashes collide with their sources by
     construction) -> FULL rollup build -> dedup pass: keeper =
     min(doc_id) per content_md5 (one aggregate + one join, both
-    bounded by the corpus's group count), losers -> delete_keys_mor
+    bounded by the corpus's group count), losers -> MoR delete_keys
     (``mor_no_rewrite`` pins that every data file survived) -> rollup
     refresh must CLAIM incremental_cdf and equal the oracle's
     originals-only recompute.
@@ -3304,7 +3307,7 @@ def lakehouse_dedup_retention_audit(
             .select("doc_id")
         )
         files_before = set(t.snapshot().files)
-        t.delete_keys_mor(losers, ["doc_id"])
+        t.delete_keys(losers, ["doc_id"], strategy="mor")
         snap = t.snapshot()
         # merge-on-read = the commit WROTE no parquet: losers became
         # vectors, and a file whose live rows ALL lost is removed
@@ -3401,7 +3404,7 @@ def lakehouse_auto_maintenance_audit(
         t.create(docs.filter(F.col("doc_id") % 16 == 0).coalesce(1))
         for i in range(1, 16):
             t.append(docs.filter(F.col("doc_id") % 16 == i).coalesce(1))
-        t.delete_mor(F.col("doc_id") % 5 == 0)
+        t.delete(F.col("doc_id") % 5 == 0, strategy="mor")
 
         policy = MaintenancePolicy(
             small_file_bytes=32 << 20,
@@ -3724,7 +3727,7 @@ def lakehouse_txn_medallion_audit(
     grows to all events, a rival stager stages silver and ABANDONS
     (``staged_invisible``: catalog still serves the t1 pair) -> tick2
     auto-repairs the wedged log and folds incrementally -> a GDPR
-    delete (``delete_mor`` of user_id%7==3) flows through tick3 as
+    delete (``delete(strategy="mor")`` of user_id%7==3) flows through tick3 as
     ``incremental_cdf`` (``modes_claimed`` pins every tick's claimed
     mode). ``history_silver`` reads the t2 silver through CATALOG
     time travel after t3 committed — cross-table-consistent history
@@ -3803,7 +3806,7 @@ def lakehouse_txn_medallion_audit(
         )
         cat_v2 = cat.state()["version"]
 
-        bronze.delete_mor(F.col("user_id") % 7 == 3)
+        bronze.delete(F.col("user_id") % 7 == 3, strategy="mor")
         r3 = refresh_medallion_txn(
             cat, bronze, "silver", "gold", silver_spec, gold_spec
         )
@@ -4150,7 +4153,7 @@ def streaming_txn_chain_audit(
             and cat._versions()[-1] == cat_head
         )
 
-        bronze.delete_mor(F.col("user_id") % 7 == 3)
+        bronze.delete(F.col("user_id") % 7 == 3, strategy="mor")
         ticks += maintain_chain_stream(cat, bronze, layers, ckpt)
         out = out.unionByName(probes("t3"))
 
@@ -4441,7 +4444,7 @@ def lakehouse_erase_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes deliberately lossy for the subject, the GDPR-over-CDF
     trade).
 
-    Lifecycle: CDF-enabled table from events -> ``delete_mor``
+    Lifecycle: CDF-enabled table from events -> ``delete(strategy="mor")``
     (user_id%13==2: DV-hidden pre-images now exist in data files AND
     in a change sidecar) -> ``erase_rows`` (user_id%11==5).
     ``final_state`` hash-gates the surviving rows; ``bytes_gone``
@@ -4474,7 +4477,7 @@ def lakehouse_erase_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = SnapshotTable(spark, os.path.join(tmp, "t"), cdf=True)
         t.create(ev.filter(F.col("event_id") % 2 == 0))
         t.append(ev.filter(F.col("event_id") % 2 == 1))
-        t.delete_mor(F.col("user_id") % 13 == 2)
+        t.delete(F.col("user_id") % 13 == 2, strategy="mor")
 
         # refs block the erase until dropped: a tag AND a live branch
         # each pin history the erase would have to leave serving the
@@ -4732,7 +4735,7 @@ def lakehouse_delta_export_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         t2 = SnapshotTable(spark, os.path.join(tmp, "t2"))
         t2.create(docs.filter(F.col("doc_id") % 7 == 0))
-        t2.delete_mor(F.col("doc_id") % 14 == 0)
+        t2.delete(F.col("doc_id") % 14 == 0, strategy="mor")
         dv_refusal = 0
         try:
             export_delta(t2, os.path.join(tmp, "delta2"))
@@ -4842,7 +4845,7 @@ def lakehouse_delta_export_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (compact to fold the vectors, re-export fresh) round-trips
         t4 = SnapshotTable(spark, os.path.join(tmp, "t4"))
         t4.create(docs.filter(F.col("doc_id") % 7 == 1))  # v1
-        t4.delete_mor(F.col("doc_id") % 14 == 1)  # v2: DVs
+        t4.delete(F.col("doc_id") % 14 == 1, strategy="mor")  # v2: DVs
         t4.compact(target_files=1)  # v3: folded, exportable
         dst4 = os.path.join(tmp, "delta4")
         export_delta(t4, dst4)

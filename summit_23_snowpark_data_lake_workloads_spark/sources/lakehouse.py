@@ -311,7 +311,8 @@ class Snapshot:
 # the manifest JSON proportional to the RUN count, which is what
 # clustered deletes (a day's rows inside a file, one user's contiguous
 # block) produce; a pathologically scattered delete produces many runs
-# and delete_mor falls back to copy-on-write past a run budget.
+# and a merge-on-read delete falls back to copy-on-write past a run
+# budget.
 
 
 def _ranges_from_indices(indices: list[int]) -> list[list[int]]:
@@ -775,6 +776,11 @@ def _file_may_match(
     except TypeError:
         return True  # incomparable types: keep the file
     raise ValueError(f"unsupported skip op {op!r} (use = < <= > >=)")
+
+
+def _nonempty(df: DataFrame) -> DataFrame | None:
+    """``df``, or ``None`` when it holds no rows (one ``limit(1)`` job)."""
+    return df if df.limit(1).count() else None
 
 
 def _align_columns(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -2100,19 +2106,19 @@ class SnapshotTable:
             replace_all=True, txn=txn,
         )
 
-    def _touched_files(self, current: DataFrame, row_filter) -> list[str]:
-        """Absolute paths of data files containing rows where
+    def _touched_files(self, current: DataFrame, row_filter) -> frozenset[str]:
+        """Manifest (relative) paths of data files containing rows where
         ``row_filter`` holds — a file-count-bounded collect (metadata
         scale, not data scale)."""
-        return [
-            r.f
+        return frozenset(
+            self._relativize(r.f)
             for r in row_filter(
                 current.withColumn("_lh_file", F.col("_metadata.file_path"))
             )
             .select(F.col("_lh_file").alias("f"))
             .distinct()
             .collect()
-        ]
+        )
 
     def _relativize(self, abs_path: str) -> str:
         # _metadata.file_path is a file: URI or plain path; strip both.
@@ -2123,97 +2129,198 @@ class SnapshotTable:
         rel = os.path.relpath(p, self.path)
         return p if rel.startswith("..") else rel
 
-    def delete(self, predicate) -> Snapshot:
-        """Row-level DELETE: rewrite only files that contain matching
-        rows; every other file carries over untouched (copy-on-write at
-        file granularity — Delta's exact DELETE strategy). Rewritten
-        files PURGE their deletion vectors (survivors come from the
-        DV-filtered scan, and the removed file's DV dies with it)."""
-        prev = self.snapshot()
-        cur = self.read()
-        touched_abs = self._touched_files(cur, lambda d: d.filter(predicate))
-        if not touched_abs:
-            return self._commit("delete", prev.version, [])
-        touched_rel = frozenset(self._relativize(p) for p in touched_abs)
-        survivors = self._scan(sorted(touched_rel), prev.dvs).filter(
-            ~predicate
-        )
-        new_files = self._write_batch(survivors) if survivors.limit(1).count() else []
-        return self._commit("delete", prev.version, new_files, remove=touched_rel)
+    # ------------------------------------------------ row-level mutation
+    #
+    # DELETE, UPDATE, MERGE and erasure share one kernel. Each public op
+    # is a small spec over it:
+    #
+    # - ``match``: keeps the target rows the op touches (a predicate
+    #   filter, a broadcast key semi-join, or the ``t⋈s`` clause filter);
+    # - ``rewrite``: copy-on-write (COW) — maps the touched files'
+    #   DV-filtered scan to the rows that replace those files;
+    # - ``mor_adds``: merge-on-read (MoR) — the rows appended beside the
+    #   deletion vectors (DVs: per-file lists of deleted row positions)
+    #   that retract the matched rows; none for a delete.
+    #
+    # COW commits as ``op``, MoR as ``f"{op}_mor"``. MoR is bounded, not
+    # just documented: past ``cap`` matched rows it falls back to COW,
+    # because DV runs live in the manifest JSON and a table-sized MoR op
+    # would turn the metadata into the table. ``merge_when`` calls the
+    # three pieces below ``_mutate`` itself: its MoR locate is a clause
+    # filter over the key-matched files only, found by the COW locate.
 
-    def delete_mor(
-        self, predicate, max_deleted_rows: int = 100_000
+    def _mutate(
+        self,
+        op: str,
+        match,
+        rewrite,
+        strategy: str,
+        cap: int,
+        mor_adds=None,
+        untouched: DataFrame | None = None,
+        txn: dict | None = None,
+        merge_keys: list[str] | None = None,
     ) -> Snapshot:
-        """Row-level DELETE, MERGE-ON-READ: instead of rewriting the
-        files that hold matching rows (:meth:`delete`'s copy-on-write),
-        record their row indices as DELETION VECTORS in the manifest —
-        a pure METADATA commit (Delta DVs / Iceberg v2 position
-        deletes). The 100 TB fit: a GDPR delete of one user's thousand
-        rows scattered across thousand 128 MB files costs one JSON
-        write instead of a 128 GB rewrite. Readers subtract DVs via a
-        codegen ``_metadata`` predicate; COW rewrites and
-        :meth:`compact` PURGE them (the accumulated-DV maintenance
-        story is exactly Delta's: OPTIMIZE re-materializes).
-
-        Honesty bounds, enforced not documented:
-
-        - a file whose live rows ALL match is removed from the
-          manifest outright (cheaper than a DV covering the file);
-        - more than ``max_deleted_rows`` matches falls back to
-          :meth:`delete` — DV runs live in the manifest JSON, so a
-          table-sized delete through DVs would turn the metadata into
-          the table; COW is the right tool there."""
+        """Run one row-level op: locate ``match``-ed rows in the live
+        table, then DV-commit them (:meth:`_dv_commit`) or rewrite their
+        files (:meth:`_cow_rewrite`). ``mor_adds(cur)`` builds the MoR
+        appended rows from the DV-filtered read ``cur``."""
+        if strategy not in ("cow", "mor"):
+            raise ValueError(f"unknown {op} strategy {strategy!r}")
         prev = self.snapshot()
-        cur = self.read()  # DV-filtered: already-deleted rows can't re-match
-        matched = cur.filter(predicate).select(
-            F.col("_metadata.file_path").alias("fp"),
-            F.col("_metadata.row_index").alias("ri"),
+        cur = self.read()  # DV-filtered: dead rows can't re-match
+        if strategy == "mor":
+            rows = self._dv_locate(cur, match, cap)
+            if rows == [] and op == "update":
+                # a no-match MoR UPDATE logs as a plain no-op `update`
+                return self._commit(op, prev.version, [], txn=txn)
+            if rows is not None:
+                return self._dv_commit(
+                    f"{op}_mor",
+                    prev,
+                    rows,
+                    mor_adds(cur) if mor_adds else None,
+                    txn=txn,
+                    merge_keys=merge_keys,
+                )
+        return self._cow_rewrite(
+            op,
+            prev,
+            self._touched_files(cur, match),
+            rewrite,
+            untouched=untouched,
+            txn=txn,
+            merge_keys=merge_keys,
         )
-        rows = matched.limit(max_deleted_rows + 1).collect()
-        if len(rows) > max_deleted_rows:
-            return self.delete(predicate)
-        if not rows:
-            return self._commit("delete_mor", prev.version, [])
+
+    def _dv_locate(self, target: DataFrame, match, cap: int) -> list | None:
+        """MoR locate: the ``(fp, ri)`` = ``_metadata`` file path and
+        row index of every ``match``-ed row of ``target``, or ``None``
+        past ``cap`` rows (the caller falls back to COW). The metadata
+        fields are extracted BEFORE ``match`` so a join inside it keeps
+        them addressable (same discipline as :meth:`_touched_files`)."""
+        rows = (
+            match(
+                target.withColumn("_lh_fp", F.col("_metadata.file_path"))
+                .withColumn("_lh_ri", F.col("_metadata.row_index"))
+            )
+            .select(F.col("_lh_fp").alias("fp"), F.col("_lh_ri").alias("ri"))
+            .limit(cap + 1)
+            .collect()
+        )
+        return None if len(rows) > cap else rows
+
+    def _dv_commit(
+        self,
+        op: str,
+        prev: Snapshot,
+        rows: list,
+        adds: DataFrame | None,
+        txn: dict | None = None,
+        merge_keys: list[str] | None = None,
+    ) -> Snapshot:
+        """MoR commit: soft-delete the located ``rows`` as deletion
+        vectors and append ``adds`` (``None``: nothing) in ONE commit.
+        A file whose live rows ALL matched leaves the manifest outright
+        (cheaper than a DV covering the file)."""
         by_file: dict[str, list[int]] = {}
         for r in rows:
             by_file.setdefault(self._relativize(r.fp), []).append(r.ri)
         dv_add: dict = {}
-        fully_gone: set[str] = set()
-        prev_dvs = prev.dvs or {}
+        gone: set[str] = set()
+        stats, dvs = prev.stats or {}, prev.dvs or {}
         for f, idx in by_file.items():
-            nrows_stat = (prev.stats or {}).get(f, {}).get("_nrows")
-            live_rows = (
-                nrows_stat[0] - _ranges_count(prev_dvs.get(f, []))
-                if nrows_stat
-                else None
-            )
-            if live_rows is not None and len(idx) >= live_rows:
-                fully_gone.add(f)  # last live row gone: drop the file
+            nrows = stats.get(f, {}).get("_nrows")
+            if nrows and len(idx) >= nrows[0] - _ranges_count(dvs.get(f, [])):
+                gone.add(f)  # last live row gone: drop the file
             else:
                 dv_add[f] = _ranges_from_indices(idx)
         # Logical-conflict granularity (Delta's check, not a blanket
         # abort): two DV deletes whose touched FILES are disjoint
         # commute — the final live set is identical in either order —
-        # so a concurrent delete_mor on other files rebases instead of
-        # raising. Anything else intervening (appends the predicate
-        # never saw, COW rewrites, compaction) still aborts.
-        mine = frozenset(dv_add) | fully_gone
+        # so a DV delete rebases over a concurrent one on other files.
+        # Anything else intervening (appends the predicate never saw,
+        # COW rewrites, compaction) still aborts, and ops that append
+        # rows never rebase.
+        mine = frozenset(dv_add) | gone
 
         def _dv_commutes(intervening) -> bool:
-            for _v, op, added, removed, dvd in intervening:
-                if op != "delete_mor" or added:
-                    return False
-                if (set(removed) | set(dvd)) & mine:
-                    return False
-            return True
+            return all(
+                other == "delete_mor"
+                and not added
+                and not (set(removed) | set(dvd)) & mine
+                for _v, other, added, removed, dvd in intervening
+            )
 
         return self._commit(
-            "delete_mor",
+            op,
             prev.version,
-            [],
-            remove=frozenset(fully_gone),
+            self._write_batch(adds) if adds is not None else [],
+            remove=frozenset(gone),
             dv_add=dv_add,
-            commute_ok=_dv_commutes,
+            txn=txn,
+            commute_ok=_dv_commutes if op == "delete_mor" else None,
+            merge_keys=merge_keys,
+        )
+
+    def _cow_rewrite(
+        self,
+        op: str,
+        prev: Snapshot,
+        touched: frozenset[str],
+        rewrite,
+        untouched: DataFrame | None = None,
+        txn: dict | None = None,
+        merge_keys: list[str] | None = None,
+    ) -> Snapshot:
+        """COW commit: replace the ``touched`` files by
+        ``rewrite(<their DV-filtered scan>)`` (``None``: no rows left).
+        With no file touched, write ``untouched`` instead, or commit
+        nothing when that is ``None``. Rewritten files PURGE their
+        deletion vectors: survivors come from the DV-filtered scan, and
+        a removed file's DV dies with it."""
+        if touched:
+            out = rewrite(self._scan(sorted(touched), prev.dvs))
+        elif untouched is None:
+            return self._commit(op, prev.version, [], txn=txn)
+        else:
+            out = untouched
+        return self._commit(
+            op,
+            prev.version,
+            self._write_batch(out) if out is not None else [],
+            remove=touched,
+            txn=txn,
+            merge_keys=merge_keys,
+        )
+
+    def delete(
+        self, predicate, strategy: str = "cow", max_deleted_rows: int = 100_000
+    ) -> Snapshot:
+        """Row-level DELETE.
+
+        ``strategy="cow"`` (default) rewrites only files that contain
+        matching rows; every other file carries over untouched
+        (copy-on-write at file granularity — Delta's exact DELETE
+        strategy).
+
+        ``strategy="mor"`` records the matched rows' positions as
+        DELETION VECTORS in the manifest instead — a pure METADATA
+        commit (Delta DVs / Iceberg v2 position deletes). The 100 TB
+        fit: a GDPR delete of one user's thousand rows scattered across
+        thousand 128 MB files costs one JSON write instead of a 128 GB
+        rewrite. Readers subtract DVs via a codegen ``_metadata``
+        predicate; COW rewrites and :meth:`compact` PURGE them (the
+        accumulated-DV maintenance story is exactly Delta's: OPTIMIZE
+        re-materializes). More than ``max_deleted_rows`` matches falls
+        back to COW. A concurrent DV delete on disjoint files rebases
+        instead of aborting."""
+        return self._mutate(
+            "delete",
+            lambda d: d.filter(predicate),
+            lambda t: _nonempty(t.filter(~predicate)),
+            strategy,
+            max_deleted_rows,
         )
 
     def delete_keys(
@@ -2221,101 +2328,23 @@ class SnapshotTable:
         keys: DataFrame,
         key_cols: list[str],
         txn: dict | None = None,
-    ) -> Snapshot:
-        """Row-level DELETE by KEY SET: rewrite only files holding
-        matching keys, dropping their matched rows (the bulk twin of
-        :meth:`delete` — a key set arrives as a DataFrame, never a
-        collected-in predicate, so a CDC apply that retracts 10^6 keys
-        stays distributed). Same COW file granularity as
-        :meth:`merge`; deleting keys that do not exist is a no-op."""
-        prev = self.snapshot()
-        cur = self.read()
-        kdf = keys.select(*key_cols)
-        touched_abs = self._touched_files(
-            cur, lambda d: d.join(F.broadcast(kdf), key_cols, "left_semi")
-        )
-        if not touched_abs:
-            return self._commit("delete", prev.version, [], txn=txn)
-        touched_rel = frozenset(self._relativize(p) for p in touched_abs)
-        survivors = self._scan(sorted(touched_rel), prev.dvs).join(
-            kdf, key_cols, "left_anti"
-        )
-        new_files = (
-            self._write_batch(survivors) if survivors.limit(1).count() else []
-        )
-        return self._commit(
-            "delete", prev.version, new_files, remove=touched_rel, txn=txn
-        )
-
-    def delete_keys_mor(
-        self,
-        keys: DataFrame,
-        key_cols: list[str],
-        txn: dict | None = None,
+        strategy: str = "cow",
         max_deleted_rows: int = 100_000,
     ) -> Snapshot:
-        """Row-level DELETE by KEY SET, MERGE-ON-READ: the DV twin of
-        :meth:`delete_keys` the same way :meth:`delete_mor` twins
-        :meth:`delete` — matched rows' positions become deletion
-        vectors in one JSON commit instead of COW-rewriting every file
-        that holds a matched key. The natural retraction shape for a
-        dedup-maintenance or GDPR pass over a 100 TB corpus: the loser
-        keys arrive as a DataFrame (never a collected-in predicate),
-        the matched positions are bounded by the actual match count,
-        and more than ``max_deleted_rows`` matches falls back to the
-        COW :meth:`delete_keys` (a table-sized delete through DVs
-        would turn the metadata into the table). Deleting absent keys
-        is a no-op. Same commute rule as :meth:`delete_mor`: a
-        concurrent DV delete on disjoint files rebases."""
-        prev = self.snapshot()
-        cur = self.read()  # DV-filtered: dead rows can't re-match
+        """Row-level DELETE by KEY SET: drop the rows whose key is in
+        ``keys`` (the bulk twin of :meth:`delete` — a key set arrives as
+        a DataFrame, never a collected-in predicate, so a CDC apply or
+        a dedup/GDPR pass that retracts 10^6 keys stays distributed).
+        Same strategies, ``max_deleted_rows`` fallback and commute rule
+        as :meth:`delete`; deleting keys that do not exist is a no-op."""
         kdf = keys.select(*key_cols)
-        matched = (
-            cur.withColumn("_lh_fp", F.col("_metadata.file_path"))
-            .withColumn("_lh_ri", F.col("_metadata.row_index"))
-            .join(F.broadcast(kdf), key_cols, "left_semi")
-            .select(F.col("_lh_fp").alias("fp"), F.col("_lh_ri").alias("ri"))
-        )
-        rows = matched.limit(max_deleted_rows + 1).collect()
-        if len(rows) > max_deleted_rows:
-            return self.delete_keys(keys, key_cols, txn=txn)
-        if not rows:
-            return self._commit("delete_mor", prev.version, [], txn=txn)
-        by_file: dict[str, list[int]] = {}
-        for r in rows:
-            by_file.setdefault(self._relativize(r.fp), []).append(r.ri)
-        dv_add: dict = {}
-        fully_gone: set[str] = set()
-        prev_dvs = prev.dvs or {}
-        for f, idx in by_file.items():
-            nrows_stat = (prev.stats or {}).get(f, {}).get("_nrows")
-            live_rows = (
-                nrows_stat[0] - _ranges_count(prev_dvs.get(f, []))
-                if nrows_stat
-                else None
-            )
-            if live_rows is not None and len(idx) >= live_rows:
-                fully_gone.add(f)
-            else:
-                dv_add[f] = _ranges_from_indices(idx)
-        mine = frozenset(dv_add) | fully_gone
-
-        def _dv_commutes(intervening) -> bool:
-            for _v, op, added, removed, dvd in intervening:
-                if op != "delete_mor" or added:
-                    return False
-                if (set(removed) | set(dvd)) & mine:
-                    return False
-            return True
-
-        return self._commit(
-            "delete_mor",
-            prev.version,
-            [],
-            remove=frozenset(fully_gone),
-            dv_add=dv_add,
+        return self._mutate(
+            "delete",
+            lambda d: d.join(F.broadcast(kdf), key_cols, "left_semi"),
+            lambda t: _nonempty(t.join(kdf, key_cols, "left_anti")),
+            strategy,
+            max_deleted_rows,
             txn=txn,
-            commute_ok=_dv_commutes,
         )
 
     def merge(
@@ -2324,115 +2353,49 @@ class SnapshotTable:
         key_cols: list[str],
         txn: dict | None = None,
         schema_evolution: bool = False,
+        strategy: str = "cow",
+        max_updated_rows: int = 100_000,
     ) -> Snapshot:
         """Row-level MERGE (upsert-by-key): matched target rows are
         replaced by their source row, unmatched survive, new keys
-        insert. Only files holding matched keys are rewritten. A source
-        with NEW columns needs ``schema_evolution=True`` (rewritten
-        survivors carry NULLs there; untouched files surface NULLs via
-        the read path's ``mergeSchema``)."""
-        prev = self.snapshot()
-        self._validate_write_schema(source, schema_evolution)
-        cur = self.read()
-        keys = source.select(*key_cols)
-        touched_abs = self._touched_files(
-            cur, lambda d: d.join(F.broadcast(keys), key_cols, "left_semi")
-        )
-        touched_rel = frozenset(self._relativize(p) for p in touched_abs)
-        if touched_abs:
-            survivors = self._scan(sorted(touched_rel), prev.dvs).join(
-                keys, key_cols, "left_anti"
-            )
-            rewrite = survivors.unionByName(source, allowMissingColumns=True)
-        else:
-            rewrite = source
-        return self._commit(
-            "merge",
-            prev.version,
-            self._write_batch(rewrite),
-            remove=touched_rel,
-            txn=txn,
-            merge_keys=[self._physical_name(c) for c in key_cols],
-        )
+        insert. A source with NEW columns needs
+        ``schema_evolution=True`` (rewritten survivors carry NULLs
+        there; untouched files surface NULLs via the read path's
+        ``mergeSchema``).
 
-    def merge_mor(
-        self,
-        source: DataFrame,
-        key_cols: list[str],
-        txn: dict | None = None,
-        schema_evolution: bool = False,
-        max_updated_rows: int = 100_000,
-    ) -> Snapshot:
-        """Row-level MERGE (upsert-by-key), MERGE-ON-READ: instead of
-        COW-rewriting every file that holds a matched key
-        (:meth:`merge`), soft-delete the matched target rows via
-        DELETION VECTORS and append the source as new files — old image
+        ``strategy="cow"`` (default) rewrites only files holding matched
+        keys. ``strategy="mor"`` soft-deletes the matched target rows
+        via DELETION VECTORS and appends the source — old image
         retracted and new image landed in ONE atomic commit (Delta's
-        DV-backed MERGE). The 100 TB fit is the upsert twin of
-        :meth:`delete_mor`: a CDC batch updating 10^4 keys scattered
-        across 10^4 128 MB files costs one source-sized write plus one
-        JSON commit, instead of a ~1 TB copy-on-write rewrite — exactly
-        the shape of the reference's continuously-upserted enrichment
-        feed (``04_sales_enrich_sp.sql:22``).
+        DV-backed MERGE). The 100 TB fit: a CDC batch updating 10^4 keys
+        scattered across 10^4 128 MB files costs one source-sized write
+        plus one JSON commit, instead of a ~1 TB copy-on-write rewrite —
+        exactly the shape of the reference's continuously-upserted
+        enrichment feed (``04_sales_enrich_sp.sql:22``). More than
+        ``max_updated_rows`` matches falls back to COW. Either strategy
+        writes the source, even when no key matches.
 
-        Honesty bounds, enforced not documented (same as delete_mor):
-
-        - a file whose live rows ALL matched is removed from the
-          manifest outright (cheaper than a DV covering the file);
-        - more than ``max_updated_rows`` matches falls back to
-          :meth:`merge` — DV runs live in the manifest JSON, so a
-          table-sized update through DVs would turn the metadata into
-          the table; COW is the right tool there.
-
-        Change-feed semantics: the commit surfaces as delete(old image)
-        rows (from the DV delta / removed files) plus insert(new image)
-        rows (the added source files) — the retraction-pair form
-        :meth:`changes` consumers (rollup, CDC) already fold. One
-        documented divergence from COW merge: a NO-OP update (source
-        row byte-identical to the target row) still emits its
+        Change-feed semantics under MoR: the commit surfaces as
+        delete(old image) rows (from the DV delta / removed files) plus
+        insert(new image) rows (the added source files) — the
+        retraction-pair form :meth:`changes` consumers (rollup, CDC)
+        already fold. One documented divergence from COW: a NO-OP update
+        (source row byte-identical to the target row) still emits its
         delete+insert pair here — the pair nets to zero for every
-        additive consumer — whereas COW merge's ``exceptAll`` diff
-        emits nothing."""
-        prev = self.snapshot()
+        additive consumer — whereas COW's ``exceptAll`` diff emits
+        nothing."""
         self._validate_write_schema(source, schema_evolution)
-        cur = self.read()  # DV-filtered: dead rows can't re-match
         keys = source.select(*key_cols)
-        # extract the metadata fields BEFORE the semi-join so the plan
-        # keeps them addressable (same discipline as _touched_files)
-        matched = (
-            cur.withColumn("_lh_fp", F.col("_metadata.file_path"))
-            .withColumn("_lh_ri", F.col("_metadata.row_index"))
-            .join(F.broadcast(keys), key_cols, "left_semi")
-            .select(F.col("_lh_fp").alias("fp"), F.col("_lh_ri").alias("ri"))
-        )
-        rows = matched.limit(max_updated_rows + 1).collect()
-        if len(rows) > max_updated_rows:
-            return self.merge(
-                source, key_cols, txn=txn, schema_evolution=schema_evolution
-            )
-        by_file: dict[str, list[int]] = {}
-        for r in rows:
-            by_file.setdefault(self._relativize(r.fp), []).append(r.ri)
-        dv_add: dict = {}
-        fully_gone: set[str] = set()
-        prev_dvs = prev.dvs or {}
-        for f, idx in by_file.items():
-            nrows_stat = (prev.stats or {}).get(f, {}).get("_nrows")
-            live_rows = (
-                nrows_stat[0] - _ranges_count(prev_dvs.get(f, []))
-                if nrows_stat
-                else None
-            )
-            if live_rows is not None and len(idx) >= live_rows:
-                fully_gone.add(f)  # last live row replaced: drop the file
-            else:
-                dv_add[f] = _ranges_from_indices(idx)
-        return self._commit(
-            "merge_mor",
-            prev.version,
-            self._write_batch(source),
-            remove=frozenset(fully_gone),
-            dv_add=dv_add,
+        return self._mutate(
+            "merge",
+            lambda d: d.join(F.broadcast(keys), key_cols, "left_semi"),
+            lambda t: t.join(keys, key_cols, "left_anti").unionByName(
+                source, allowMissingColumns=True
+            ),
+            strategy,
+            max_updated_rows,
+            mor_adds=lambda _cur: source,
+            untouched=source,
             txn=txn,
             merge_keys=[self._physical_name(c) for c in key_cols],
         )
@@ -2485,12 +2448,12 @@ class SnapshotTable:
         conditional-upsert feeds this serves (the reference's enrich
         MERGE, ``04_sales_enrich_sp.sql:22``) stay one commit.
 
-        ``strategy="mor"`` — the conditional twin of
-        :meth:`merge_mor`: rows a clause AFFECTS (updated or deleted)
-        become deletion-vector positions, updated images + unmatched
-        inserts land as new files, carried rows never move — one JSON
-        commit for a business-rule CDC batch scattered over a 100 TB
-        table. Same honesty bounds (fully-affected files removed
+        ``strategy="mor"`` — the conditional form of
+        ``merge(strategy="mor")``: rows a clause AFFECTS (updated or
+        deleted) become deletion-vector positions, updated images +
+        unmatched inserts land as new files, carried rows never move —
+        one JSON commit for a business-rule CDC batch scattered over a
+        100 TB table. Same bounds (fully-affected files removed
         outright; more than ``max_updated_rows`` affected rows falls
         back to COW)."""
         if matched_update is None and matched_delete_cond is None and not insert_unmatched:
@@ -2522,10 +2485,9 @@ class SnapshotTable:
             }
         cur = self.read()
         keys = source.select(*key_cols)
-        touched_abs = self._touched_files(
+        touched = self._touched_files(
             cur, lambda d: d.join(F.broadcast(keys), key_cols, "left_semi")
         )
-        touched_rel = frozenset(self._relativize(p) for p in touched_abs)
 
         # clause expressions over the t/s aliases, shared by both
         # strategies. NULL conditions mean "clause not satisfied" (the
@@ -2549,126 +2511,84 @@ class SnapshotTable:
             lambda a, b: a & b,
             [F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}")) for c in key_cols],
         )
+        # update wins, else the target row carries (delete handled by
+        # the caller's filter)
+        updated = [
+            F.when(
+                has_match & upd_cond,
+                matched_update[c]
+                if matched_update and c in matched_update
+                else F.col(f"t.{c}"),
+            )
+            .otherwise(F.col(f"t.{c}"))
+            .alias(c)
+            for c in data_cols
+        ]
 
-        def updated_projection(joined):
-            # update wins, else the target row carries (delete handled
-            # by the caller's filter)
-            return [
-                F.when(
-                    has_match & upd_cond,
-                    matched_update[c]
-                    if matched_update and c in matched_update
-                    else F.col(f"t.{c}"),
-                )
-                .otherwise(F.col(f"t.{c}"))
-                .alias(c)
-                for c in data_cols
-            ]
+        def clauses(target: DataFrame) -> DataFrame:
+            return target.alias("t").join(source.alias("s"), on, "left")
 
-        def unmatched_inserts(matched_keys):
+        def with_inserts(rows: DataFrame | None, matched_keys):
             if not insert_unmatched:
-                return None
+                return rows
             src = source.alias("s")
             if insert_cond is not None:
                 # NULL = not satisfied, same as the matched clauses
                 src = src.filter(F.coalesce(insert_cond, F.lit(False)))
+            if matched_keys is not None:
+                src = src.join(matched_keys, key_cols, "left_anti")
             return (
-                src.join(matched_keys, key_cols, "left_anti")
-                if matched_keys is not None
-                else src
+                src
+                if rows is None
+                else rows.unionByName(src, allowMissingColumns=True)
             )
 
-        if strategy == "mor" and touched_abs:
-            t = (
-                self._scan(sorted(touched_rel), prev.dvs)
-                .withColumn("_lh_fp", F.col("_metadata.file_path"))
-                .withColumn("_lh_ri", F.col("_metadata.row_index"))
-                .alias("t")
+        merge_keys = [self._physical_name(c) for c in key_cols]
+        if strategy == "mor" and touched:
+            t = self._scan(sorted(touched), prev.dvs)
+            rows = self._dv_locate(
+                t,
+                lambda d: clauses(d).filter(has_match & (upd_cond | del_cond)),
+                max_updated_rows,
             )
-            joined = t.join(source.alias("s"), on, "left")
-            affected = joined.filter(
-                has_match & (upd_cond | del_cond)
-            ).select(
-                F.col("t._lh_fp").alias("fp"), F.col("t._lh_ri").alias("ri")
-            )
-            rows = affected.limit(max_updated_rows + 1).collect()
-            if len(rows) <= max_updated_rows:
-                by_file: dict[str, list[int]] = {}
-                for r in rows:
-                    by_file.setdefault(self._relativize(r.fp), []).append(
-                        r.ri
-                    )
-                dv_add: dict = {}
-                fully_gone: set[str] = set()
-                prev_dvs = prev.dvs or {}
-                for f, idx in by_file.items():
-                    nrows_stat = (prev.stats or {}).get(f, {}).get("_nrows")
-                    live = (
-                        nrows_stat[0] - _ranges_count(prev_dvs.get(f, []))
-                        if nrows_stat
-                        else None
-                    )
-                    if live is not None and len(idx) >= live:
-                        fully_gone.add(f)
-                    else:
-                        dv_add[f] = _ranges_from_indices(idx)
-                updated = joined.filter(has_match & upd_cond).select(
-                    *updated_projection(joined)
+            if rows is not None:
+                joined = clauses(t)
+                adds = with_inserts(
+                    joined.filter(has_match & upd_cond).select(*updated),
+                    joined.filter(has_match).select(
+                        *[F.col(f"t.{c}").alias(c) for c in key_cols]
+                    ),
                 )
-                matched_keys = joined.filter(has_match).select(
-                    *[F.col(f"t.{c}").alias(c) for c in key_cols]
-                )
-                adds = updated
-                ins = unmatched_inserts(matched_keys)
-                if ins is not None:
-                    adds = adds.unionByName(ins, allowMissingColumns=True)
-                new_files = (
-                    self._write_batch(adds)
-                    if adds.limit(1).count()
-                    else []
-                )
-                return self._commit(
+                return self._dv_commit(
                     "merge_mor",
-                    prev.version,
-                    new_files,
-                    remove=frozenset(fully_gone),
-                    dv_add=dv_add,
+                    prev,
+                    rows,
+                    _nonempty(adds),
                     txn=txn,
-                    merge_keys=[self._physical_name(c) for c in key_cols],
+                    merge_keys=merge_keys,
                 )
             # fall through to COW past the run budget
 
-        pieces = []
-        matched_keys = None
-        if touched_abs:
-            t = self._scan(sorted(touched_rel), prev.dvs).alias("t")
-            joined = t.join(source.alias("s"), on, "left")
+        def rewrite(t: DataFrame) -> DataFrame:
             # one projection arbitrates every clause per row: update
             # wins, else delete drops, else the target row carries
-            survivors = joined.filter(
-                ~has_match | upd_cond | ~del_cond
-            ).select(*updated_projection(joined))
-            pieces.append(survivors)
-            matched_keys = (
-                self._scan(sorted(touched_rel), prev.dvs)
-                .join(F.broadcast(keys), key_cols, "left_semi")
-                .select(*key_cols)
+            return with_inserts(
+                clauses(t)
+                .filter(~has_match | upd_cond | ~del_cond)
+                .select(*updated),
+                t.join(F.broadcast(keys), key_cols, "left_semi").select(
+                    *key_cols
+                ),
             )
-        ins = unmatched_inserts(matched_keys)
-        if ins is not None:
-            pieces.append(ins)
-        if not pieces:
-            return self._commit("merge", prev.version, [], txn=txn)
-        rewrite = pieces[0]
-        for p in pieces[1:]:
-            rewrite = rewrite.unionByName(p, allowMissingColumns=True)
-        return self._commit(
+
+        return self._cow_rewrite(
             "merge",
-            prev.version,
-            self._write_batch(rewrite),
-            remove=touched_rel,
+            prev,
+            touched,
+            rewrite,
+            untouched=with_inserts(None, None),
             txn=txn,
-            merge_keys=[self._physical_name(c) for c in key_cols],
+            merge_keys=merge_keys,
         )
 
     def update(
@@ -2691,15 +2611,13 @@ class SnapshotTable:
         carried through the same write (Delta's UPDATE). ``"mor"``
         soft-deletes the matched positions via DELETION VECTORS and
         appends the transformed rows — one JSON commit for an update
-        scattered across a 100 TB table, with the same honesty bounds
-        as :meth:`delete_mor`/:meth:`merge_mor` (fully-updated files
+        scattered across a 100 TB table, with the same bounds as
+        ``delete``/``merge(strategy="mor")`` (fully-updated files
         removed outright; more than ``max_updated_rows`` matches falls
         back to COW). Either way the change feed sees delete(old) +
         insert(new) pairs; a no-op update cancels under COW's
         ``exceptAll`` and nets to zero for additive consumers under
-        MoR (the documented merge_mor divergence)."""
-        if strategy not in ("cow", "mor"):
-            raise ValueError(f"unknown update strategy {strategy!r}")
+        MoR (the documented MoR merge divergence)."""
         fields = {f.name: f.dataType for f in self.table_schema().fields}
         missing = [c for c in set_exprs if c not in fields]
         if missing:
@@ -2717,67 +2635,18 @@ class SnapshotTable:
             c: (e if isinstance(e, Column) else F.lit(e)).cast(fields[c])
             for c, e in set_exprs.items()
         }
-        prev = self.snapshot()
-        cur = self.read()  # DV-filtered: dead rows can't match
-
-        if strategy == "mor":
-            matched = (
-                cur.withColumn("_lh_fp", F.col("_metadata.file_path"))
-                .withColumn("_lh_ri", F.col("_metadata.row_index"))
-                .filter(predicate)
-                .select(
-                    F.col("_lh_fp").alias("fp"), F.col("_lh_ri").alias("ri")
-                )
-            )
-            rows = matched.limit(max_updated_rows + 1).collect()
-            if len(rows) <= max_updated_rows:
-                if not rows:
-                    return self._commit("update", prev.version, [], txn=txn)
-                by_file: dict[str, list[int]] = {}
-                for r in rows:
-                    by_file.setdefault(self._relativize(r.fp), []).append(
-                        r.ri
-                    )
-                dv_add: dict = {}
-                fully_gone: set[str] = set()
-                prev_dvs = prev.dvs or {}
-                for f, idx in by_file.items():
-                    nrows_stat = (prev.stats or {}).get(f, {}).get("_nrows")
-                    live = (
-                        nrows_stat[0] - _ranges_count(prev_dvs.get(f, []))
-                        if nrows_stat
-                        else None
-                    )
-                    if live is not None and len(idx) >= live:
-                        fully_gone.add(f)
-                    else:
-                        dv_add[f] = _ranges_from_indices(idx)
-                new_rows = cur.filter(predicate).withColumns(set_exprs)
-                return self._commit(
-                    "update_mor",
-                    prev.version,
-                    self._write_batch(new_rows),
-                    remove=frozenset(fully_gone),
-                    dv_add=dv_add,
-                    txn=txn,
-                )
-            # fall through to COW past the run budget
-
-        touched_abs = self._touched_files(cur, lambda d: d.filter(predicate))
-        if not touched_abs:
-            return self._commit("update", prev.version, [], txn=txn)
-        touched_rel = frozenset(self._relativize(p) for p in touched_abs)
-        rewritten = self._scan(sorted(touched_rel), prev.dvs).withColumns(
-            {
-                c: F.when(predicate, e).otherwise(F.col(c))
-                for c, e in set_exprs.items()
-            }
-        )
-        return self._commit(
+        return self._mutate(
             "update",
-            prev.version,
-            self._write_batch(rewritten),
-            remove=touched_rel,
+            lambda d: d.filter(predicate),
+            lambda t: t.withColumns(
+                {
+                    c: F.when(predicate, e).otherwise(F.col(c))
+                    for c, e in set_exprs.items()
+                }
+            ),
+            strategy,
+            max_updated_rows,
+            mor_adds=lambda cur: cur.filter(predicate).withColumns(set_exprs),
             txn=txn,
         )
 
@@ -4182,35 +4051,27 @@ class SnapshotTable:
         versions_before = self._versions()
         # RAW scan: deletion vectors ignored, so DV-hidden pre-images
         # of the subject locate their files too
-        raw = self._scan(sorted(prev.files), None)
-        touched_abs = self._touched_files(
-            raw, lambda d: d.filter(predicate)
+        touched = self._touched_files(
+            self._scan(sorted(prev.files), None),
+            lambda d: d.filter(predicate),
         )
-        if touched_abs:
-            touched_rel = frozenset(
-                self._relativize(p) for p in touched_abs
-            )
+        if touched:
             # survivors: live (DV-respected) non-subject rows of the
             # touched files — the rewrite folds the DV in, so neither
             # the subject nor unrelated soft-deleted rows resurrect
-            survivors = self._scan(sorted(touched_rel), prev.dvs).filter(
-                ~predicate
-            )
-            new_files = (
-                self._write_batch(survivors)
-                if survivors.limit(1).count()
-                else []
-            )
-            self._commit(
-                "erase", prev.version, new_files, remove=touched_rel
+            self._cow_rewrite(
+                "erase",
+                prev,
+                touched,
+                lambda t: _nonempty(t.filter(~predicate)),
             )
         removed = self.vacuum(retain_last=1, orphan_grace_ms=0)
         redacted = self._redact_change_files(predicate)
         return {
-            "files_rewritten": len(touched_abs),
+            "files_rewritten": len(touched),
             "versions_expired": len(versions_before)
             - len(self._versions())
-            + (1 if touched_abs else 0),
+            + (1 if touched else 0),
             "data_files_deleted": len(removed),
             "sidecars_redacted": redacted,
         }

@@ -1025,7 +1025,7 @@ class MultiTableTransaction:
 
     Lifecycle: ``txn.table(name)`` opens (and remembers) a handle; any
     number of normal table operations follow (append / merge /
-    delete_mor / update — each lands in the table's own log, durable
+    delete / update — each lands in the table's own log, durable
     but unpinned, with the versions this transaction produced recorded
     via its commit protocol); ``commit()`` moves every touched pin to
     the HIGHEST VERSION THIS TRANSACTION PRODUCED in one CAS — never

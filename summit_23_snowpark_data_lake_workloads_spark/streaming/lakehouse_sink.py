@@ -101,7 +101,7 @@ def merge_stream_into_snapshot_table(
     last-write-wins if not). The table must already exist (MERGE needs
     a schema to match against).
 
-    ``strategy="mor"`` upserts via :meth:`SnapshotTable.merge_mor`
+    ``strategy="mor"`` upserts via ``SnapshotTable.merge(strategy="mor")``
     (deletion vectors + append, one JSON commit) instead of
     copy-on-write — the right default once the table is large relative
     to each micro-batch: a 10^4-row CDC batch scattered over 10^4
@@ -146,10 +146,8 @@ def merge_stream_into_snapshot_table(
                 strategy=strategy,
                 txn=txn,
             )
-        elif strategy == "mor":
-            table.merge_mor(batch_df, key_cols, txn=txn)
         else:
-            table.merge(batch_df, key_cols, txn=txn)
+            table.merge(batch_df, key_cols, txn=txn, strategy=strategy)
         _maybe_compact(
             [table],
             batch_id,

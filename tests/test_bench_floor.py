@@ -62,3 +62,16 @@ def test_recorded_floor_on_real_history():
     assert "q1_pricing_summary" in scan["fq"]
     # r11 is tail-truncated: it must never appear in `used`
     assert "BENCH_r11.json" not in scan["used"]
+
+
+def test_cold_calibration_skips_warm_anchors():
+    """Only a COLD anchor feeds the drift ratio, for the scan and for a
+    pinned floor file alike: r01-r14 ``calibration_sec`` was cold, r15's
+    was warm, r16+ name the cold one explicitly."""
+    warm_only = {"calibration_sec": 0.2}
+    assert bench.cold_calibration(warm_only, "BENCH_r07.json") == 0.2
+    assert bench.cold_calibration(warm_only, "/x/BENCH_r15.json") is None
+    assert bench.cold_calibration(warm_only, "/x/BENCH_r15_c8.json") is None
+    assert bench.cold_calibration(warm_only, "pinned.json") is None
+    both = {"calibration_sec": 0.2, "calibration_cold_sec": 0.5}
+    assert bench.cold_calibration(both, "/x/BENCH_r16.json") == 0.5

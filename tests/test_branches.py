@@ -110,7 +110,7 @@ def test_merge_rebases_over_disjoint_main_commits(spark, tmp_path):
     br = t.create_branch("exp")
     br.delete(F.col("id") < 2)  # branch rewrites A -> A' (drops 0,1)
     t.append(_df(spark, 10, 15))  # main adds file B
-    t.delete_mor(F.col("id") == 12)  # main DVs B only
+    t.delete(F.col("id") == 12, strategy="mor")  # main DVs B only
     t.merge_branch("exp")
     assert _ids(t.read()) == [2, 3, 4, 10, 11, 13, 14]
 
@@ -137,8 +137,8 @@ def test_merge_conflict_dv_overlap(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(_df(spark, 0, 6))
     br = t.create_branch("exp")
-    br.delete_mor(F.col("id") == 1)
-    t.delete_mor(F.col("id") == 5)
+    br.delete(F.col("id") == 1, strategy="mor")
+    t.delete(F.col("id") == 5, strategy="mor")
     with pytest.raises(BranchMergeConflict):
         t.merge_branch("exp")
 
@@ -159,7 +159,7 @@ def test_merge_transfers_branch_dvs(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(_df(spark, 0, 6))
     br = t.create_branch("exp")
-    br.delete_mor(F.col("id").isin(1, 3))
+    br.delete(F.col("id").isin(1, 3), strategy="mor")
     t.append(_df(spark, 10, 12))
     t.merge_branch("exp")
     assert _ids(t.read()) == [0, 2, 4, 5, 10, 11]
@@ -471,14 +471,16 @@ def test_merge_model_invariant(spark, tmp_path_factory, bdel, badd,
     init = set(range(10))
     br = t.create_branch("exp")
     if bdel:
-        (br.delete_mor if b_mor else br.delete)(
-            F.col("id").isin(*[int(x) for x in bdel])
+        br.delete(
+            F.col("id").isin(*[int(x) for x in bdel]),
+            strategy="mor" if b_mor else "cow",
         )
     if badd:
         br.append(_df(spark, 100, 100 + badd))
     if mdel:
-        (t.delete_mor if m_mor else t.delete)(
-            F.col("id").isin(*[int(x) for x in mdel])
+        t.delete(
+            F.col("id").isin(*[int(x) for x in mdel]),
+            strategy="mor" if m_mor else "cow",
         )
     if madd:
         t.append(_df(spark, 200, 200 + madd))

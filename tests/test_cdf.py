@@ -169,7 +169,7 @@ def test_merge_mor_labels(spark, table):
     src = spark.createDataFrame(
         [(5, 1, 99.0), (42, 1, 84.0)], "id int, grp int, v double"
     )
-    table.merge_mor(src, ["id"])
+    table.merge(src, ["id"], strategy="mor")
     got = _lrows(table.changes(1, 2, update_labels=True))
     assert got == [
         (2, "insert", 42, 1, 84.0),

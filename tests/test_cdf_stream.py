@@ -113,7 +113,7 @@ def test_merge_mor_commit_flows_through_stream(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     fact.create(_df(spark, 0, 20))
     maintain_rollup_stream(fact, silver, _PREP, ["grp"], ["v"], ckpt)
-    fact.merge_mor(_df(spark, 10, 25, grp=4), ["id"])
+    fact.merge(_df(spark, 10, 25, grp=4), ["id"], strategy="mor")
     maintain_rollup_stream(fact, silver, _PREP, ["grp"], ["v"], ckpt)
     assert _silver_state(silver) == _batch_state(fact)
 
@@ -164,7 +164,7 @@ def test_replica_stream_tracks_source_row_identically(spark, tmp_path):
     rows = lambda t: sorted((r.id, r.grp, r.v) for r in t.read().collect())
     assert rows(dst) == rows(src)
     src.delete(F.col("id") % 5 == 0)
-    src.merge_mor(_df(spark, 15, 25, grp=8), ["id"])
+    src.merge(_df(spark, 15, 25, grp=8), ["id"], strategy="mor")
     ranges = maintain_replica_stream(src, dst, ["id"], ckpt)
     assert ranges == [(1, 2), (2, 3)]
     assert rows(dst) == rows(src)

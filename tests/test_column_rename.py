@@ -126,7 +126,7 @@ def test_reserved_physical_name_cannot_return(spark, table):
 
 
 def test_rename_composes_with_dv_and_cdf(spark, table):
-    table.delete_mor(F.col("amount") >= 16.0)  # kills ids 8, 9
+    table.delete(F.col("amount") >= 16.0, strategy="mor")  # kills ids 8, 9
     table.rename_column("amount", "price")
     assert sorted(r.id for r in table.read().collect()) == list(range(8))
     table.delete(F.col("price") == 0.0)  # COW through map + DV

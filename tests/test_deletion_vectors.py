@@ -56,7 +56,7 @@ def test_ranges_helpers():
 
 def test_delete_mor_is_metadata_only(spark, table):
     files_before = set(table.snapshot().files)
-    snap = table.delete_mor(F.col("id") % 5 == 0)
+    snap = table.delete(F.col("id") % 5 == 0, strategy="mor")
     assert snap.operation == "delete_mor"
     assert set(snap.files) == files_before  # no rewrite, no removal
     assert snap.dvs and sum(len(r) for r in snap.dvs.values()) > 0
@@ -66,8 +66,8 @@ def test_delete_mor_is_metadata_only(spark, table):
 
 
 def test_delete_mor_accumulates(spark, table):
-    table.delete_mor(F.col("id") % 5 == 0)
-    table.delete_mor(F.col("id") % 7 == 0)  # 0 already dead: no re-delete
+    table.delete(F.col("id") % 5 == 0, strategy="mor")
+    table.delete(F.col("id") % 7 == 0, strategy="mor")  # 0 already dead: no re-delete
     assert _ids(table) == [
         i for i in range(20) if i % 5 != 0 and i % 7 != 0
     ]
@@ -75,7 +75,7 @@ def test_delete_mor_accumulates(spark, table):
 
 
 def test_time_travel_across_dv_commits(spark, table):
-    table.delete_mor(F.col("id") < 5)
+    table.delete(F.col("id") < 5, strategy="mor")
     assert _ids(table, version=1) == list(range(20))
     assert _ids(table, version=2) == list(range(5, 20))
 
@@ -84,14 +84,14 @@ def test_fully_deleted_file_is_removed_not_dvd(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "fd"))
     t.create(_df(spark, 0, 5, grp=0))
     t.append(_df(spark, 5, 10, grp=1))
-    snap = t.delete_mor(F.col("grp") == 1)  # kills the whole 2nd batch
+    snap = t.delete(F.col("grp") == 1, strategy="mor")  # kills the whole 2nd batch
     assert not snap.dvs  # no vector: the files just left the manifest
     assert _ids(t) == list(range(5))
     assert len(snap.files) < len(t.snapshot(version=2).files)
 
 
 def test_compact_purges_dvs(spark, table):
-    table.delete_mor(F.col("id") % 3 == 0)
+    table.delete(F.col("id") % 3 == 0, strategy="mor")
     live = _ids(table)
     snap = table.compact(target_files=1)
     assert not snap.dvs  # rewritten files carry no vectors
@@ -99,7 +99,7 @@ def test_compact_purges_dvs(spark, table):
 
 
 def test_cow_delete_on_dvd_file_does_not_resurrect(spark, table):
-    dv_files = set(table.delete_mor(F.col("id") % 5 == 0).dvs)
+    dv_files = set(table.delete(F.col("id") % 5 == 0, strategy="mor").dvs)
     touched = set(table.snapshot().files)
     table.delete(F.col("id") == 7)  # COW rewrite of the touched file
     after = table.snapshot()
@@ -115,7 +115,7 @@ def test_cow_delete_on_dvd_file_does_not_resurrect(spark, table):
 
 
 def test_merge_on_dvd_file_does_not_resurrect(spark, table):
-    table.delete_mor(F.col("id") % 5 == 0)
+    table.delete(F.col("id") % 5 == 0, strategy="mor")
     table.merge(
         spark.createDataFrame([(7, 9, -1.0)], "id int, grp int, v double"),
         ["id"],
@@ -126,14 +126,14 @@ def test_merge_on_dvd_file_does_not_resurrect(spark, table):
 
 
 def test_rollback_restores_dvs(spark, table):
-    table.delete_mor(F.col("id") < 10)  # v2
+    table.delete(F.col("id") < 10, strategy="mor")  # v2
     table.append(_df(spark, 100, 105))  # v3
     table.rollback(2)  # v4 = v2's files AND its deletion vectors
     assert _ids(table) == list(range(10, 20))
 
 
 def test_changes_emits_dv_deletes(spark, table):
-    table.delete_mor(F.col("id") % 5 == 0)
+    table.delete(F.col("id") % 5 == 0, strategy="mor")
     got = table.changes(1, 2).collect()
     assert all(r._change_type == "delete" for r in got)
     assert sorted(r.id for r in got) == [0, 5, 10, 15]
@@ -143,7 +143,7 @@ def test_changes_emits_dv_deletes(spark, table):
 def test_changes_preimage_respects_prior_dvs(spark, table):
     """A COW rewrite AFTER a DV commit must not re-emit the DV'd rows
     as deletes — the pre-image applies the prior version's vectors."""
-    table.delete_mor(F.col("id") % 5 == 0)  # v2: kills 0,5,10,15
+    table.delete(F.col("id") % 5 == 0, strategy="mor")  # v2: kills 0,5,10,15
     table.delete(F.col("id") == 7)  # v3: COW rewrite of the file
     got = table.changes(2, 3).collect()
     assert sorted(r.id for r in got) == [7]
@@ -171,7 +171,7 @@ def test_rollup_refresh_through_delete_mor(spark, tmp_path):
         )
 
     refresh_rollup(fact, rollup, prep, ["day"], ["v"])
-    fact.delete_mor(F.col("id") % 4 == 0)
+    fact.delete(F.col("id") % 4 == 0, strategy="mor")
     assert (
         refresh_rollup(fact, rollup, prep, ["day"], ["v"])
         == "incremental_cdf"
@@ -195,19 +195,19 @@ def test_cdc_replication_through_delete_mor(spark, tmp_path):
     dst = SnapshotTable(spark, str(tmp_path / "d"))
     src.create(_df(spark, 0, 10))
     replicate_changes(src, dst, ["id"])
-    src.delete_mor(F.col("id") % 3 == 0)
+    src.delete(F.col("id") % 3 == 0, strategy="mor")
     assert replicate_changes(src, dst, ["id"]) == "incremental"
     assert _ids(dst) == _ids(src)
 
 
 def test_fallback_to_cow_past_run_budget(spark, table):
-    snap = table.delete_mor(F.col("id") % 2 == 0, max_deleted_rows=3)
+    snap = table.delete(F.col("id") % 2 == 0, strategy="mor", max_deleted_rows=3)
     assert snap.operation == "delete"  # honest fallback, not a huge DV
     assert _ids(table) == [i for i in range(20) if i % 2 == 1]
 
 
 def test_dvs_survive_checkpoint_and_vacuum(spark, table):
-    table.delete_mor(F.col("id") % 5 == 0)
+    table.delete(F.col("id") % 5 == 0, strategy="mor")
     for i in range(8):  # cross the every-8 FULL-manifest checkpoint
         table.append(_df(spark, 100 + i, 101 + i))
     assert _ids(table)[:4] == [1, 2, 3, 4]
@@ -221,7 +221,7 @@ def test_partitioned_table_dvs(spark, tmp_path):
     t.create(
         _df(spark, 0, 10, grp=0).unionByName(_df(spark, 10, 20, grp=1))
     )
-    t.delete_mor((F.col("grp") == 1) & (F.col("id") % 2 == 0))
+    t.delete((F.col("grp") == 1) & (F.col("id") % 2 == 0), strategy="mor")
     parts = {p["grp"]: p["num_rows"] for p in t.partitions()}
     assert parts == {"0": 10, "1": 5}
     got = _ids(t, partition_where=[("grp", "=", "1")])
@@ -229,7 +229,7 @@ def test_partitioned_table_dvs(spark, tmp_path):
 
 
 def test_clone_carries_dvs(spark, table, tmp_path):
-    table.delete_mor(F.col("id") % 5 == 0)
+    table.delete(F.col("id") % 5 == 0, strategy="mor")
     clone = table.clone_to(str(tmp_path / "branch"))
     assert _ids(clone) == [i for i in range(20) if i % 5 != 0]
 

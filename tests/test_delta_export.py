@@ -173,7 +173,7 @@ def test_snapshot_export_round_trip_and_structure(spark, tmp_path):
 def test_export_refusals_and_compact_remedy(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(_df(spark, 0, 10))
-    t.delete_mor(F.col("id") == 4)
+    t.delete(F.col("id") == 4, strategy="mor")
     dst = str(tmp_path / "delta")
     with pytest.raises(ValueError, match="deletion vectors"):
         export_delta(t, dst)
@@ -236,7 +236,7 @@ def test_sync_refuses_dv_commit(spark, tmp_path):
     t.create(_df(spark, 0, 10))
     dst = str(tmp_path / "delta")
     export_delta(t, dst)
-    t.delete_mor(F.col("id") == 7)
+    t.delete(F.col("id") == 7, strategy="mor")
     with pytest.raises(ValueError, match="deletion vectors"):
         sync_delta(t, dst)
 
@@ -485,7 +485,7 @@ def test_sync_refuses_dvs_on_readded_files(spark, tmp_path):
     rows. The whole-version DV check closes it."""
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(_df(spark, 0, 10))  # v1
-    t.delete_mor(F.col("id") == 3)  # v2: DVs
+    t.delete(F.col("id") == 3, strategy="mor")  # v2: DVs
     t.compact(target_files=1)  # v3: folded — exportable head
     dst = str(tmp_path / "delta")
     export_delta(t, dst)

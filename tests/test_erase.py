@@ -43,8 +43,8 @@ def test_erase_purges_every_surface(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), cdf=True)
     t.create(_df(spark, 0, 5))     # v1: file A (0-4)
     t.append(_df(spark, 5, 10))    # v2: file B (5-9)
-    t.delete_mor(F.col("id") == 3)  # v3: subject row 3 DV-hidden, bytes
-    #                                 remain in A AND in a CDF sidecar
+    t.delete(F.col("id") == 3, strategy="mor")  # v3: subject row 3 DV-hidden,
+    #                         bytes remain in A AND in a CDF sidecar
     rpt = t.erase_rows(F.col("id").isin(3, 7))
     # head view clean
     ids = sorted(r.id for r in t.read().collect())
@@ -101,7 +101,7 @@ def test_erase_composes_with_column_mapping(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), cdf=True)
     t.create(_df(spark, 0, 6))
     t.rename_column("id", "ident")
-    t.delete_mor(F.col("ident") == 4)
+    t.delete(F.col("ident") == 4, strategy="mor")
     t.erase_rows(F.col("ident").isin(1, 4))
     assert sorted(r.ident for r in t.read().collect()) == [0, 2, 3, 5]
     assert _all_parquet_ids(spark, t.path) & {1, 4} == set()
@@ -222,7 +222,7 @@ def test_erase_model_invariant(spark, tmp_path_factory, subj, predel, cdf):
     t.create(_df(spark, 0, 10))
     t.append(_df(spark, 10, 20))
     if predel:
-        t.delete_mor(F.col("id").isin(*predel))
+        t.delete(F.col("id").isin(*predel), strategy="mor")
     t.erase_rows(F.col("id").isin(*(subj or {-1})))
 
     expect = sorted(set(range(20)) - predel - subj)

@@ -67,7 +67,7 @@ def test_dv_burden_trips_single_file_rewrite(spark, tmp_path):
     )
     t = SnapshotTable(spark, str(tmp_path / "dv"))
     t.create(spark_df)
-    t.delete_mor(F.col("id") < 40)  # 40% soft-deleted, one file
+    t.delete(F.col("id") < 40, strategy="mor")  # 40% soft-deleted, one file
     policy = MaintenancePolicy(min_small_files=10_000, dv_fraction=0.3)
     plan = plan_maintenance(t, policy)
     assert plan["compact"] is not None
@@ -79,7 +79,7 @@ def test_dv_burden_trips_single_file_rewrite(spark, tmp_path):
     # below the threshold: nothing trips
     t2 = SnapshotTable(spark, str(tmp_path / "dv2"))
     t2.create(spark_df)
-    t2.delete_mor(F.col("id") < 10)  # 10% < 30%
+    t2.delete(F.col("id") < 10, strategy="mor")  # 10% < 30%
     assert plan_maintenance(t2, policy)["compact"] is None
 
 

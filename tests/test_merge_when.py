@@ -156,7 +156,7 @@ def test_merge_when_composes_with_dvs_and_labels(spark, tmp_path):
     feed splits the conditional update into preimage/postimage pairs
     while the true insert stays an insert."""
     t = _target(spark, tmp_path)
-    t.delete_mor(F.col("id") == 3)
+    t.delete(F.col("id") == 3, strategy="mor")
     v0 = t.snapshot().version
     src = _src(spark, [(3, 33.0, "z"), (4, 44.0, "u"), (8, 8.0, "i")])
     t.merge_when(src, ["id"], matched_update="all")

@@ -62,7 +62,7 @@ def table(spark, tmp_path):
 def test_merge_mor_upserts_without_rewriting(spark, table):
     before_files = set(table.snapshot().files)
     src = _df(spark, 15, 25, grp=9)  # 15..19 update, 20..24 insert
-    table.merge_mor(src, ["id"])
+    table.merge(src, ["id"], strategy="mor")
     snap = table.snapshot()
     # every pre-existing file survived (no COW rewrite); DVs carry the
     # old images of the 5 updated keys
@@ -83,14 +83,14 @@ def test_merge_mor_matches_cow_merge_result(spark, tmp_path):
     b.create(_df(spark, 0, 20))
     src = _df(spark, 10, 30, grp=7)
     a.merge(src, ["id"])
-    b.merge_mor(src, ["id"])
+    b.merge(src, ["id"], strategy="mor")
     assert _rows(a) == _rows(b)
     # and the metadata row counts agree with the data
     assert b.row_count() == a.row_count() == 30
 
 
 def test_merge_mor_time_travel_and_rollback(spark, table):
-    table.merge_mor(_df(spark, 18, 22, grp=5), ["id"])
+    table.merge(_df(spark, 18, 22, grp=5), ["id"], strategy="mor")
     assert _rows(table, version=1) == [
         (i, 0, float(i * 2)) for i in range(20)
     ]
@@ -100,7 +100,9 @@ def test_merge_mor_time_travel_and_rollback(spark, table):
 
 def test_merge_mor_falls_back_to_cow_past_budget(spark, table):
     before_files = set(table.snapshot().files)
-    table.merge_mor(_df(spark, 0, 20, grp=3), ["id"], max_updated_rows=5)
+    table.merge(
+        _df(spark, 0, 20, grp=3), ["id"], strategy="mor", max_updated_rows=5
+    )
     snap = table.snapshot()
     # COW merge: matched files rewritten, no DVs
     assert snap.operation == "merge"
@@ -113,9 +115,10 @@ def test_merge_mor_fully_replaced_file_is_removed(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(spark.range(4).coalesce(1).select(F.col("id").cast("int").alias("id"), F.lit(0).alias("grp"), F.lit(1.0).alias("v")))
     old = set(t.snapshot().files)
-    t.merge_mor(
+    t.merge(
         spark.range(4).select(F.col("id").cast("int").alias("id"), F.lit(1).alias("grp"), F.lit(2.0).alias("v")),
         ["id"],
+        strategy="mor",
     )
     snap = t.snapshot()
     # every live row of the single old file matched: file dropped, no DV
@@ -124,7 +127,7 @@ def test_merge_mor_fully_replaced_file_is_removed(spark, tmp_path):
 
 
 def test_merge_mor_changes_emit_retraction_pairs(spark, table):
-    table.merge_mor(_df(spark, 18, 22, grp=5), ["id"])
+    table.merge(_df(spark, 18, 22, grp=5), ["id"], strategy="mor")
     chg = table.changes(1, 2)
     dels = sorted(
         r.id for r in chg.filter(F.col("_change_type") == "delete").collect()
@@ -142,7 +145,7 @@ def test_merge_mor_feeds_rollup_incrementally(spark, tmp_path):
     fact.create(_df(spark, 0, 20))
     prep = lambda df: df.select("grp", "v")
     assert refresh_rollup(fact, rollup, prep, ["grp"], ["v"]) == "full"
-    fact.merge_mor(_df(spark, 10, 25, grp=4), ["id"])
+    fact.merge(_df(spark, 10, 25, grp=4), ["id"], strategy="mor")
     assert (
         refresh_rollup(fact, rollup, prep, ["grp"], ["v"])
         == "incremental_cdf"
@@ -199,7 +202,7 @@ def test_persisted_cdf_equals_compute_on_read(spark, tmp_path):
     for t in (a, b):
         t.create(_df(spark, 0, 20))
         t.merge(_df(spark, 15, 25, grp=9), ["id"])
-        t.delete_mor(F.col("id") % 7 == 0)
+        t.delete(F.col("id") % 7 == 0, strategy="mor")
     assert _change_state(a.changes(1, 3)) == _change_state(b.changes(1, 3))
     # a's delete/merge commits actually carry sidecars
     assert a._raw(2).get("change_files") and a._raw(3).get("change_files")
@@ -302,11 +305,11 @@ def test_disjoint_dv_deletes_both_land(spark, tmp_path):
         out = orig_read(*a, **kw)
         if not fired["done"]:
             fired["done"] = True
-            racer.delete_mor(F.col("id") == 15)  # grp=1 file only
+            racer.delete(F.col("id") == 15, strategy="mor")  # grp=1 file only
         return out
 
     t.read = racy_read
-    t.delete_mor(F.col("id") == 3)  # grp=0 file only — must REBASE
+    t.delete(F.col("id") == 3, strategy="mor")  # grp=0 file only — must REBASE
     t.read = orig_read
     assert sorted(r.id for r in t.read().collect()) == [
         i for i in range(20) if i not in (3, 15)
@@ -324,15 +327,15 @@ def test_overlapping_dv_deletes_abort(spark, tmp_path):
         out = orig_read(*a, **kw)
         if not fired["done"]:
             fired["done"] = True
-            racer.delete_mor(F.col("id") == 7)
+            racer.delete(F.col("id") == 7, strategy="mor")
         return out
 
     t.read = racy_read
     with pytest.raises(ConcurrentWriteError):
-        t.delete_mor(F.col("id") == 3)
+        t.delete(F.col("id") == 3, strategy="mor")
     t.read = orig_read
     # retry on fresh state succeeds
-    t.delete_mor(F.col("id") == 3)
+    t.delete(F.col("id") == 3, strategy="mor")
     assert sorted(r.id for r in t.read().collect()) == [
         i for i in range(10) if i not in (3, 7)
     ]
@@ -354,7 +357,7 @@ def test_dv_delete_racing_append_still_aborts(spark, tmp_path):
 
     t.read = racy_read
     with pytest.raises(ConcurrentWriteError):
-        t.delete_mor(F.col("id") == 3)
+        t.delete(F.col("id") == 3, strategy="mor")
     t.read = orig_read
     assert t.read().count() == 15  # the append survived
 
@@ -546,7 +549,8 @@ def test_update_mor_is_dv_plus_append(spark, table):
 
 def test_update_mor_falls_back_to_cow_past_budget(spark, table):
     table.update(
-        F.lit(True), {"v": F.col("v") * 2}, strategy="mor",
+        F.lit(True), {"v": F.col("v") * 2},
+        strategy="mor",
         max_updated_rows=3,
     )
     snap = table.snapshot()
@@ -680,8 +684,8 @@ def test_compact_dv_fraction_purges_heavy_files_only(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"))
     t.create(_df(spark, 0, 10).coalesce(1))        # file A: ids 0..9
     t.append(_df(spark, 10, 20, grp=1).coalesce(1))  # file B: ids 10..19
-    t.delete_mor((F.col("id") < 8))                # A: 8/10 dead
-    t.delete_mor(F.col("id") == 15)                # B: 1/10 dead
+    t.delete((F.col("id") < 8), strategy="mor")      # A: 8/10 dead
+    t.delete(F.col("id") == 15, strategy="mor")      # B: 1/10 dead
     before = set(t.snapshot().files)
     snap = t.compact(target_files=1, dv_fraction=0.5)
     after = set(snap.files)
@@ -703,10 +707,10 @@ def test_rollback_dv_delta_reports_only_newly_dead_rows(spark, tmp_path):
     delta must be relative to the PRIOR version, or changes()/
     file_changes would re-emit long-dead rows as fresh deletes."""
     t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.create(_df(spark, 0, 10).coalesce(1))   # v1
-    t.delete_mor(F.col("id") == 3)            # v2: DV {3}
-    t.delete_mor(F.col("id") == 5)            # v3: DVs {3,5}
-    t.rollback(2)                             # v4: back to DV {3}
+    t.create(_df(spark, 0, 10).coalesce(1))      # v1
+    t.delete(F.col("id") == 3, strategy="mor")   # v2: DV {3}
+    t.delete(F.col("id") == 5, strategy="mor")   # v3: DVs {3,5}
+    t.rollback(2)                                # v4: back to DV {3}
     # v4 relative to v3: nothing newly dead (row 5 RESURRECTED —
     # consumers treat rollback as replace-all and full-recompute)
     (v, op, added, removed, dvd) = t.file_changes(3, 4)[0]
@@ -738,7 +742,9 @@ def test_threaded_disjoint_dv_deletes_all_land(spark, tmp_path):
     def deleter(target):
         try:
             # each handle owns its own snapshot resolution
-            SnapshotTable(spark, t.path).delete_mor(F.col("id") == target)
+            SnapshotTable(spark, t.path).delete(
+                F.col("id") == target, strategy="mor"
+            )
         except Exception as e:  # pragma: no cover
             errs.append((target, repr(e)))
 
@@ -811,18 +817,20 @@ def test_delete_keys_mor_matches_cow_twin(spark, tmp_path):
         t.create(_df(spark, 0, 20))
     a.delete_keys(keys, ["id"])
     before = set(b.snapshot().files)
-    b.delete_keys_mor(keys, ["id"])
+    b.delete_keys(keys, ["id"], strategy="mor")
     assert _rows(a) == _rows(b)
     assert before <= set(b.snapshot().files)  # vectors, not rewrites
     assert b.row_count() == 18
     # absent-key deletes are a no-op commit
-    b.delete_keys_mor(spark.createDataFrame([(500,)], "id int"), ["id"])
+    b.delete_keys(
+        spark.createDataFrame([(500,)], "id int"), ["id"], strategy="mor"
+    )
     assert b.read().count() == 18
 
 
 def test_delete_keys_mor_falls_back_to_cow_past_budget(spark, table):
     keys = spark.range(0, 15).select(F.col("id").cast("int").alias("id"))
-    table.delete_keys_mor(keys, ["id"], max_deleted_rows=5)
+    table.delete_keys(keys, ["id"], strategy="mor", max_deleted_rows=5)
     snap = table.snapshot()
     assert snap.operation == "delete" and not snap.dvs  # COW path took it
     assert sorted(r.id for r in table.read().collect()) == list(range(15, 20))
@@ -896,8 +904,10 @@ def test_merge_mor_and_changes_compose_with_rename(spark, tmp_path):
     t.create(_df(spark, 0, 10))
     t.delete(F.col("id") == 0)  # v2: pre-rename change commit
     t.rename_column("v", "amount")  # v3
-    t.merge_mor(
-        _df(spark, 8, 12, grp=5).withColumnRenamed("v", "amount"), ["id"]
+    t.merge(
+        _df(spark, 8, 12, grp=5).withColumnRenamed("v", "amount"),
+        ["id"],
+        strategy="mor",
     )  # v4
     assert sorted(
         (r.id, r.amount) for r in t.read().select("id", "amount").collect()
@@ -964,7 +974,7 @@ def test_describe_detail(spark, tmp_path):
         cdf=True,
     )
     t.create(_df(spark, 0, 20))
-    t.delete_mor(F.col("id") % 4 == 0)
+    t.delete(F.col("id") % 4 == 0, strategy="mor")
     t.rename_column("grp", "segment")
     d = t.describe_detail()
     assert d["version"] == 3 and d["operation"] == "rename_column"

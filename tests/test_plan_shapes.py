@@ -745,7 +745,7 @@ def test_dv_filter_keeps_pushdown_and_codegen(spark, tmp_path):
         .coalesce(2)
         .select(F.col("id").cast("int").alias("id"), (F.col("id") * 2.0).alias("v"))
     )
-    t.delete_mor(F.col("id") % 97 == 0)
+    t.delete(F.col("id") % 97 == 0, strategy="mor")
     plan = plan_of(t.read().filter(F.col("id") > 2500))
     assert "GreaterThan(id,2500)" in plan  # user predicate reaches the scan
     assert "Join" not in plan  # DV application is a predicate, not a join
@@ -794,11 +794,12 @@ def test_mor_update_read_path_keeps_pushdown_and_codegen(spark, tmp_path):
         .coalesce(2)
         .select(F.col("id").cast("int").alias("id"), (F.col("id") * 2.0).alias("v"))
     )
-    t.merge_mor(
+    t.merge(
         spark.range(0, 5000, 97).select(
             F.col("id").cast("int").alias("id"), F.lit(-1.0).alias("v")
         ),
         ["id"],
+        strategy="mor",
     )
     t.update(F.col("id") % 89 == 0, {"v": F.col("v") + 1.0}, strategy="mor")
     plan = plan_of(t.read().filter(F.col("id") > 2500))

@@ -477,3 +477,45 @@ def test_signed_delta_folds_four_way_labels(spark):
     delta = _signed_delta(chg, lambda df: df, ["k"], ["v"])
     got = {(r.k, r.n_rows, r.sum_v) for r in delta.collect()}
     assert got == {("a", 1, 25), ("b", -1, -7)}
+
+
+@pytest.mark.parametrize("partition_by", [["day"], None])
+def test_refresh_checkpoints_delta_only_when_partitioned(
+    spark, tmp_path, monkeypatch, partition_by
+):
+    """Both incremental branches (append-only and change-feed)
+    localCheckpoint the refresh delta for PARTITIONED rollups only —
+    there ``_apply_delta`` consumes it from several actions and also
+    checkpoints its combine, so each refresh checkpoints twice; the
+    unpartitioned path reads the delta inside one write and checkpoints
+    nothing. Either way the rollup equals a full recompute."""
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    calls = []
+    orig = DataFrame.localCheckpoint
+
+    def counting(self, *a, **kw):
+        calls.append(1)
+        return orig(self, *a, **kw)
+
+    fact = SnapshotTable(spark, str(tmp_path / "f"))
+    rollup = SnapshotTable(
+        spark, str(tmp_path / "r"), partition_by=partition_by
+    )
+    fact.create(_events(spark, 0, 12))
+    assert refresh_rollup(fact, rollup, _prepare, ["day"], ["v"]) == "full"
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    per_refresh = 2 if partition_by else 0
+    fact.append(_events(spark, 12, 16))
+    assert (
+        refresh_rollup(fact, rollup, _prepare, ["day"], ["v"])
+        == "incremental"
+    )
+    assert len(calls) == per_refresh
+    assert _state(rollup) == _full(spark, fact)
+    fact.delete(F.col("id") % 3 == 0)
+    assert (
+        refresh_rollup(fact, rollup, _prepare, ["day"], ["v"])
+        == "incremental_cdf"
+    )
+    assert len(calls) == 2 * per_refresh
+    assert _state(rollup) == _full(spark, fact)

@@ -332,13 +332,14 @@ def test_tag_composes_with_mor_rename_cdf_vacuum(spark, tmp_path):
             [(i, float(i)) for i in range(8)], "k int, v double"
         ).coalesce(1)
     )                                                       # v1
-    t.merge_mor(
+    t.merge(
         spark.createDataFrame([(2, -2.0), (9, 9.0)], "k int, v double"),
         ["k"],
+        strategy="mor",
     )                                                       # v2: DV + append
     t.create_tag("post-merge", version=2)
     t.rename_column("v", "val")                             # v3: metadata
-    t.delete_mor(F.col("k") % 2 == 1)                       # v4: DVs
+    t.delete(F.col("k") % 2 == 1, strategy="mor")           # v4: DVs
     t.vacuum(retain_last=1, orphan_grace_ms=0)
     assert 2 in t._versions()
     # tagged read: renamed logical view, post-merge values, DV applied

@@ -92,7 +92,7 @@ def test_first_tick_full_then_incremental_then_noop(spark, env):
 def test_delete_flows_as_cdf_and_pair_stays_consistent(spark, env):
     cat, bronze = env
     refresh_medallion_txn(cat, bronze, "silver", "gold", SILVER, GOLD)
-    bronze.delete_mor(F.col("k") == "a")
+    bronze.delete(F.col("k") == "a", strategy="mor")
     r = refresh_medallion_txn(cat, bronze, "silver", "gold", SILVER, GOLD)
     assert r["silver"] == "incremental_cdf"
     assert _silver_map(cat) == {"b": (1, 10)}
@@ -216,7 +216,7 @@ def test_three_layer_chain_never_tears(spark, tmp_path):
     assert set(r2["modes"].values()) == {"noop"}
     assert cat.state()["version"] == v
 
-    bronze.delete_mor(F.col("k") == "b")
+    bronze.delete(F.col("k") == "b", strategy="mor")
     r3 = refresh_chain_txn(cat, bronze, layers)
     assert r3["modes"]["silver"] == "incremental_cdf"
     assert cat.read("platinum").collect()[0].sum_t == 7
@@ -281,7 +281,7 @@ def test_chain_stream_row_deletes_flow_and_never_tear(spark, env, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     layers = [("silver", SILVER), ("gold", GOLD)]
     maintain_chain_stream(cat, bronze, layers, ckpt)
-    bronze.delete_mor(F.col("k") == "a")
+    bronze.delete(F.col("k") == "a", strategy="mor")
     r = maintain_chain_stream(cat, bronze, layers, ckpt)
     assert [x["modes"]["silver"] for x in r] == ["incremental_cdf"]
     assert _silver_map(cat) == {"b": (1, 10)}
